@@ -81,11 +81,11 @@ def run_ingestion(
     root = out_root or tempfile.mkdtemp(prefix="pos_stream_")
 
     change_sink = f"{root}/inventory_change"
+    changes = inventory_change_stream(
+        spark, events_path, watermark, max_files_per_trigger
+    )
     q1 = (
-        inventory_change_stream(
-            spark, events_path, watermark, max_files_per_trigger
-        )
-        .writeStream.format("parquet")
+        changes.writeStream.format("parquet")
         .option("path", change_sink)
         .option("checkpointLocation", f"{root}/ckpt_change")
         .outputMode("append")
@@ -114,6 +114,7 @@ def run_ingestion(
     q2.awaitTermination()
 
     return {
-        "inventory_change": spark.read.parquet(change_sink),
+        # the sink's schema is the stream's: declared, not footer-inferred
+        "inventory_change": spark.read.schema(changes.schema).parquet(change_sink),
         "inventory_snapshot": target.current(spark),
     }

@@ -121,16 +121,21 @@ class CdcTarget:
 
     # -- read -------------------------------------------------------------
 
+    def _applied(self, state: DataFrame) -> DataFrame:
+        """State rows -> the applied view: deletes filtered,
+        bookkeeping columns dropped."""
+        if self.apply_as_deletes is not None:
+            state = state.filter(~F.expr(self.apply_as_deletes))
+        drop = [c for c in self.except_columns if c in state.columns]
+        return state.drop(*drop) if drop else state
+
     def current(self, spark: SparkSession) -> DataFrame:
         """The applied table: latest rows, deletes filtered, bookkeeping
         columns dropped — what ``dlt.apply_changes`` exposes."""
         state = self.state.state_for(spark)
         if state is None:
             raise ValueError(f"CDC target {self.path} has no state yet")
-        if self.apply_as_deletes is not None:
-            state = state.filter(~F.expr(self.apply_as_deletes))
-        drop = [c for c in self.except_columns if c in state.columns]
-        return state.drop(*drop) if drop else state
+        return self._applied(state)
 
     def current_at(self, spark: SparkSession, commit: int) -> DataFrame:
         """Time travel: the applied table as of an earlier micro-batch
@@ -139,10 +144,44 @@ class CdcTarget:
         state = self.state.state_at(spark, commit)
         if state is None:
             raise ValueError(f"CDC target {self.path} empty at commit {commit}")
-        if self.apply_as_deletes is not None:
-            state = state.filter(~F.expr(self.apply_as_deletes))
-        drop = [c for c in self.except_columns if c in state.columns]
-        return state.drop(*drop) if drop else state
+        return self._applied(state)
+
+    def _diff_sides(
+        self, spark: SparkSession, commit: int, to_commit: int | None = None
+    ) -> tuple[DataFrame, DataFrame, bool]:
+        """``(old, new, changed)``: the applied views at ``commit`` and
+        at ``to_commit`` (``None``: now), both under the union of the
+        whole table's schemas at the two points (numerics widened,
+        nested fields merged), so a diff's columns never depend on
+        which buckets it reads. Only the buckets whose chain tip
+        differs between the two points are read — an unchanged bucket
+        cannot hold a changed key. With none differing the diff is
+        empty: ``changed`` is False and both sides are the same
+        zero-row plan over the whole-table read (no scan, no job) for
+        the caller to select its empty result from, without a join."""
+        st = self.state
+        changed = st.changed_buckets(commit, to_commit)
+        new = st.state_for(spark) if to_commit is None else st.state_at(spark, to_commit)
+        if new is None:
+            raise ValueError(f"CDC target {self.path} has no state yet")
+        if not changed:
+            # same tips at both points: same dirs, same schema
+            new = self._applied(new.limit(0))
+            return new, new, False
+        old = st.state_at(spark, commit)
+        if old is None:
+            raise ValueError(f"CDC target {self.path} empty at commit {commit}")
+        schema = unify_schemas([old.schema, new.schema])
+        old = st.state_at(spark, commit, changed, schema)
+        new = (
+            st.state_for(spark, changed, schema)
+            if to_commit is None
+            else st.state_at(spark, to_commit, changed, schema)
+        )
+        # a side with no chain in these buckets has no rows there
+        old = old if old is not None else new.limit(0)
+        new = new if new is not None else old.limit(0)
+        return self._applied(old), self._applied(new), True
 
     def changes_since(
         self,
@@ -169,6 +208,13 @@ class CdcTarget:
         no-op). Retention: ``keep_versions`` must cover the fold's
         watermark lag plus crash slack.
 
+        The diff is pruned by bucket version: only buckets whose chain
+        tip moved since ``commit`` are read and joined, and with none
+        moved the empty result is planned without a scan or a join. The
+        payload structs still carry every column of the whole table at
+        either point, so the output schema does not depend on which
+        buckets changed.
+
         ``commit=None`` means "everything" (every applied row as 'c').
         ``keys_filter`` (a DataFrame of key columns) prunes the diff to
         those keys — pass the trigger's batch keys to keep the work
@@ -176,12 +222,15 @@ class CdcTarget:
         """
         from pyspark.sql import types as T
 
-        new = self.current(spark)
-        if keys_filter is not None:
-            new = new.join(
+        def _keyed(df: DataFrame) -> DataFrame:
+            if keys_filter is None:
+                return df
+            return df.join(
                 F.broadcast(keys_filter.select(*self.keys).distinct()), self.keys
             )
+
         if commit is None:
+            new = _keyed(self.current(spark))
             payload_fields = [
                 f for f in new.schema.fields if f.name not in self.keys
             ]
@@ -193,33 +242,26 @@ class CdcTarget:
                 .alias("before"),
                 F.struct(*[f.name for f in payload_fields]).alias("after"),
             )
-        old = self.current_at(spark, commit)
-        if keys_filter is not None:
-            old = old.join(
-                F.broadcast(keys_filter.select(*self.keys).distinct()), self.keys
-            )
-        # payload = UNION of both snapshots' columns, numerics widened:
+        # payload = every non-key column of both sides, which share the
+        # union of the whole table's schemas at the two points:
         # upsert_batch supports additive evolution, so a column added
         # (or int->long widened) between the watermark commit and now
-        # must appear NULL/widened on the old side, not blow up the
-        # time-travel select — same contract as state_diff below.
-        unified = unify_schemas([old.schema, new.schema])
-        val_fields = [f for f in unified.fields if f.name not in self.keys]
-
-        def _payload_struct(df: DataFrame) -> Column:
-            return F.struct(
-                *[
-                    (
-                        F.col(f.name).cast(f.dataType)
-                        if f.name in df.columns
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in val_fields
-                ]
+        # reads NULL/widened on the old side — same contract as
+        # state_diff below
+        old, new, changed = self._diff_sides(spark, commit)
+        val_fields = [f for f in new.schema.fields if f.name not in self.keys]
+        if not changed:
+            # zero rows over one pinned read: no scan, no join, no job
+            none = F.lit(None).cast(T.StructType(val_fields))
+            return new.select(
+                *self.keys,
+                F.lit(None).cast("string").alias("op"),
+                none.alias("before"),
+                none.alias("after"),
             )
-
-        n = new.select(*self.keys, _payload_struct(new).alias("after"))
-        o = old.select(*self.keys, _payload_struct(old).alias("before"))
+        payload = F.struct(*[f.name for f in val_fields])
+        n = _keyed(new).select(*self.keys, payload.alias("after"))
+        o = _keyed(old).select(*self.keys, payload.alias("before"))
         joined = n.join(o, self.keys, "full_outer")
         return (
             joined.withColumn(
@@ -332,32 +374,26 @@ def state_diff(
     keys, classified per key: ``added`` (only in ``to``), ``removed``
     (only in ``from`` — a delete applied in between), ``changed`` (both
     sides present, any non-key column differs). Unchanged keys are
-    dropped. One shuffle on the keys; at production keyspace both
-    snapshots come off the same bucket layout, so the join co-locates.
+    dropped. Only buckets whose recorded version differs between the
+    two commit records are read (an unchanged bucket cannot differ).
+    One shuffle on the keys; at production keyspace both snapshots
+    come off the same bucket layout, so the join co-locates.
 
     Output: key columns + ``change_kind``.
     """
-    a = target.current_at(spark, from_commit)
-    b = target.current_at(spark, to_commit)
+    a, b, changed = target._diff_sides(spark, from_commit, to_commit)
     keys = target.keys
-    # value columns = the UNION of both snapshots' columns: the sink
-    # supports additive schema evolution, so a column added between the
-    # commits must participate (NULL on the side that predates it) or a
-    # row whose only change is in the new column would diff as
-    # unchanged
-    types = {f.name: f.dataType for f in [*a.schema.fields, *b.schema.fields]}
-    val_cols = sorted(c for c in types if c not in keys)
-
-    def _struct(df: DataFrame) -> Column:
-        return F.struct(
-            *[
-                F.col(c) if c in df.columns else F.lit(None).cast(types[c]).alias(c)
-                for c in val_cols
-            ]
-        )
-
-    sa = a.select(*keys, _struct(a).alias("__va"))
-    sb = b.select(*keys, _struct(b).alias("__vb"))
+    if not changed:
+        # zero rows over one pinned read: no scan, no join, no job
+        return b.select(*keys, F.lit(None).cast("string").alias("change_kind"))
+    # value columns = every non-key column: both sides share the union
+    # of the two snapshots' schemas, since the sink supports additive
+    # schema evolution and a column added between the commits must
+    # participate (NULL on the side that predates it) or a row whose
+    # only change is in the new column would diff as unchanged
+    vals = F.struct(*[c for c in b.columns if c not in keys])
+    sa = a.select(*keys, vals.alias("__va"))
+    sb = b.select(*keys, vals.alias("__vb"))
     joined = sa.join(sb, keys, "full_outer")
     kind = (
         F.when(F.col("__va").isNull(), F.lit("added"))

@@ -5,6 +5,7 @@ incremental gold aggregate).
 Layout::
 
     <path>/bucket_0007/v_00000003/*.parquet
+    <path>/bucket_0007/v_00000003/_schema.json   (the dir's schema)
     <path>/_commits/commit_00000002.json   (table-wide snapshot ids)
 
 Keys route to buckets via ``pmod(xxhash64(keys...), num_buckets)`` —
@@ -15,6 +16,14 @@ directories exist because Spark cannot overwrite a parquet path it is
 concurrently reading; the per-bucket directory rename is the commit
 (atomic on local FS/HDFS; swap for the store's commit protocol — or for
 Delta/Iceberg MERGE — on object stores).
+
+Every version dir carries its schema as a ``_schema.json`` sidecar,
+written into the staged dir before the commit rename, so it is as
+immutable and crash-consistent as the parquet beside it (the leading
+underscore keeps it out of parquet listings). Reads unify the
+sidecars of the dirs they scan and pass the result to
+``spark.read.schema`` — no footer-inference job per read. Dirs
+written before sidecars existed fall back to footer inference.
 
 The merge semantics are pluggable: ``merge_batch`` hands the caller the
 touched-bucket state (or ``None``) plus the batch and writes whatever
@@ -51,6 +60,8 @@ from pyspark.sql import types as T
 from db_cdc_poc_spark.streaming.lease import WriterLease
 
 BUCKET_COL = "__state_bucket"
+#: Per-version-dir schema sidecar (see module docstring).
+SCHEMA_SIDECAR = "_schema.json"
 
 #: Safe widening chains (left widens into right, values preserved).
 _WIDENING_CHAINS: tuple[tuple[T.DataType, ...], ...] = (
@@ -73,26 +84,85 @@ def wider_type(a: T.DataType, b: T.DataType) -> T.DataType | None:
 def unify_schemas(schemas: Sequence[T.StructType]) -> T.StructType:
     """Union of column sets with widening on type conflicts — what
     ``mergeSchema`` would do if it understood numeric widening (it
-    hard-fails on int-vs-long). Raises on non-widenable conflicts:
-    silent coercion corrupts CDC state."""
-    types: dict[str, T.DataType] = {}
-    order: list[str] = []
-    for sch in schemas:
+    hard-fails on int-vs-long). Struct columns merge field by field at
+    every depth (arrays and maps through their element types), as
+    ``mergeSchema`` does, and each field keeps the metadata of its
+    first occurrence. Columns come out nullable. Raises on
+    non-widenable conflicts: silent coercion corrupts CDC state."""
+    return _merge_structs(schemas, prefix="")
+
+
+def _merge_structs(structs: Sequence[T.StructType], prefix: str) -> T.StructType:
+    fields: dict[str, T.StructField] = {}
+    for sch in structs:
         for f in sch.fields:
-            if f.name not in types:
-                types[f.name] = f.dataType
-                order.append(f.name)
-            else:
-                w = wider_type(types[f.name], f.dataType)
-                if w is None:
-                    raise TypeError(
-                        f"state column {f.name!r} has incompatible types "
-                        f"{types[f.name].simpleString()} vs "
-                        f"{f.dataType.simpleString()}; only in-family numeric "
-                        "widening (int->long, float->double) is supported"
-                    )
-                types[f.name] = w
-    return T.StructType([T.StructField(n, types[n], True) for n in order])
+            seen = fields.get(f.name)
+            dt = (
+                f.dataType
+                if seen is None
+                else _unify_types(seen.dataType, f.dataType, prefix + f.name)
+            )
+            meta = f.metadata if seen is None else seen.metadata
+            fields[f.name] = T.StructField(f.name, dt, True, meta)
+    return T.StructType(list(fields.values()))
+
+
+def _unify_types(a: T.DataType, b: T.DataType, name: str) -> T.DataType:
+    """One field's reconciled type (``name`` is its dotted path, for
+    the error)."""
+    if a == b:
+        return a
+    if isinstance(a, T.StructType) and isinstance(b, T.StructType):
+        return _merge_structs([a, b], prefix=f"{name}.")
+    if isinstance(a, T.ArrayType) and isinstance(b, T.ArrayType):
+        return T.ArrayType(
+            _unify_types(a.elementType, b.elementType, f"{name}.element"), True
+        )
+    if isinstance(a, T.MapType) and isinstance(b, T.MapType):
+        return T.MapType(
+            _unify_types(a.keyType, b.keyType, f"{name}.key"),
+            _unify_types(a.valueType, b.valueType, f"{name}.value"),
+            True,
+        )
+    w = wider_type(a, b)
+    if w is None:
+        raise TypeError(
+            f"state column {name!r} has incompatible types "
+            f"{a.simpleString()} vs {b.simpleString()}; only in-family "
+            "numeric widening (int->long, float->double) is supported"
+        )
+    return w
+
+
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every nested field, element and value nullable — the
+    form Spark's file sources give every schema they read, so a sidecar
+    compares equal to a footer-inferred schema of the same data."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _write_sidecar(version_dir: Path, schema: T.StructType) -> None:
+    (version_dir / SCHEMA_SIDECAR).write_text(_as_nullable(schema).json())
+
+
+def _read_sidecar(version_dir: Path) -> T.StructType | None:
+    """The dir's recorded schema; ``None`` for a dir written before
+    sidecars existed."""
+    try:
+        text = (version_dir / SCHEMA_SIDECAR).read_text()
+    except FileNotFoundError:
+        return None
+    return T.StructType.fromJson(json.loads(text))
+
 
 MergeFn = Callable[[DataFrame | None, DataFrame], DataFrame]
 
@@ -224,19 +294,58 @@ class BucketedStateTable:
         chain after this merge — a consistent table-wide snapshot id.
         One tiny JSON per commit (directory listing, no data read);
         the write-then-rename makes the record's appearance atomic."""
-        versions = {
-            str(b): vs[-1].name[2:]  # "00000007" or "00000007.d"
-            for b in range(self.num_buckets)
-            if (vs := self._versions(b))
-        }
+        versions = {str(b): v for b, v in self._tip_versions().items()}
         n = (self.commits() or [-1])[-1] + 1
         tmp = self._commits_dir() / f".commit_{n:08d}.json.tmp"
         tmp.write_text(json.dumps({"commit": n, "versions": versions}))
         tmp.rename(self._commits_dir() / f"commit_{n:08d}.json")
         return n
 
-    def state_at(self, spark: SparkSession, commit: int) -> DataFrame | None:
-        """Time travel: the full table exactly as of ``commit``.
+    def _commit_versions(self, commit: int) -> dict[int, str]:
+        """Bucket -> tip version name (``"00000007"`` or
+        ``"00000007.d"``) recorded by ``commit``; raises ``KeyError``
+        for an unknown commit."""
+        rec = self._commits_dir() / f"commit_{commit:08d}.json"
+        if not rec.is_file():
+            raise KeyError(f"no commit {commit}; have {self.commits()}")
+        versions = json.loads(rec.read_text())["versions"]
+        # older commit files recorded ints; newer record the dir name
+        # suffix (which may mark a delta, "00000007.d")
+        return {
+            int(b): v if isinstance(v, str) else f"{int(v):08d}"
+            for b, v in versions.items()
+        }
+
+    def _tip_versions(self) -> dict[int, str]:
+        """Bucket -> current tip version name (``"00000007"`` or
+        ``"00000007.d"``), the form commit records hold."""
+        return {
+            b: vs[-1].name[2:]
+            for b in range(self.num_buckets)
+            if (vs := self._versions(b))
+        }
+
+    def changed_buckets(self, commit: int, to_commit: int | None = None) -> list[int]:
+        """Buckets whose chain tip differs between ``commit`` and
+        ``to_commit`` (``None``: now). Version dirs are immutable and
+        never renumbered, so a bucket outside this list reads exactly
+        the same rows at both points — diffs need scan only these."""
+        a = self._commit_versions(commit)
+        b = self._tip_versions() if to_commit is None else self._commit_versions(to_commit)
+        return sorted(k for k in a.keys() | b.keys() if a.get(k) != b.get(k))
+
+    def state_at(
+        self,
+        spark: SparkSession,
+        commit: int,
+        buckets: Sequence[int] | None = None,
+        schema: T.StructType | None = None,
+    ) -> DataFrame | None:
+        """Time travel: the table (or the given buckets of it) exactly
+        as of ``commit``; ``None`` when those buckets held no chain then.
+        ``schema`` (a superset of the dirs' unified schema, e.g. a
+        wider read's) replaces the one the dirs record, so a pruned
+        read lines up column for column with that wider read.
 
         Reads each bucket's version recorded in that commit's snapshot.
         Retention is bounded by ``keep_versions`` (exactly Delta's
@@ -244,63 +353,98 @@ class BucketedStateTable:
         queryable, or raise ``StateVersionVacuumedError`` when a
         recorded version is gone.
         """
-        rec = self._commits_dir() / f"commit_{commit:08d}.json"
-        if not rec.is_file():
-            raise KeyError(f"no commit {commit}; have {self.commits()}")
-        versions = json.loads(rec.read_text())["versions"]
+        versions = self._commit_versions(commit)
+        if buckets is not None:
+            versions = {b: versions[b] for b in buckets if b in versions}
         paths = []
-        for b_str, v in versions.items():
-            # older commit files recorded ints; newer record the dir
-            # name suffix (which may mark a delta, "00000007.d")
-            name = v if isinstance(v, str) else f"{int(v):08d}"
-            tip = self._bucket_dir(int(b_str)) / f"v_{name}"
-            chain = self._chain_dirs(int(b_str), upto_name=f"v_{name}")
+        for b, name in versions.items():
+            tip = self._bucket_dir(b) / f"v_{name}"
+            chain = self._chain_dirs(b, upto_name=f"v_{name}")
             if not tip.is_dir() or not chain or chain[-1] != tip:
                 raise StateVersionVacuumedError(
-                    f"bucket {b_str} v{name} was vacuumed (keep_versions="
+                    f"bucket {b} v{name} was vacuumed (keep_versions="
                     f"{self.keep_versions}); raise keep_versions to retain history"
                 )
             paths.extend(chain)
         if not paths:
             return None
-        return self._read_chains(spark, paths)
+        return self._read_chains(spark, paths, schema)
 
     def state_for(
-        self, spark: SparkSession, buckets: Sequence[int] | None = None
+        self,
+        spark: SparkSession,
+        buckets: Sequence[int] | None = None,
+        schema: T.StructType | None = None,
     ) -> DataFrame | None:
         """Latest state of the given buckets (all buckets if None);
-        ``None`` when no chain exists yet."""
+        ``None`` when no chain exists yet. ``schema``: as in
+        :meth:`state_at`."""
         paths = self._latest_paths(buckets)
         if not paths:
             return None
-        return self._read_chains(spark, paths)
+        return self._read_chains(spark, paths, schema)
 
-    def _read_chains(self, spark: SparkSession, paths: Sequence[Path]) -> DataFrame:
-        """Read bucket chains under one reconciled schema.
+    def _read_chains(
+        self,
+        spark: SparkSession,
+        paths: Sequence[Path],
+        schema: T.StructType | None = None,
+    ) -> DataFrame:
+        """Read bucket chains under one reconciled schema (see
+        :meth:`_schema_of`), or under ``schema`` when given."""
+        if schema is None:
+            schema = self._schema_of(spark, paths)
+        return spark.read.schema(schema).parquet(*map(str, paths))
+
+    def _schema_of(self, spark: SparkSession, paths: Sequence[Path]) -> T.StructType:
+        """The unified schema of a set of version dirs.
 
         Chains evolve independently (a batch only rewrites the buckets
         it touches), so a multi-bucket read must union the per-chain
-        schemas: columns added later are NULL in older chains, and a
-        chain still holding the narrow type of a since-widened column
-        (int vs long, float vs double) is up-cast on read — the
-        parquet readers support widening promotions, which plain
-        ``mergeSchema`` rejects.
+        schemas: columns (and nested struct fields) added later are
+        NULL in older chains, and a chain still holding the narrow type
+        of a since-widened column (int vs long, float vs double) is
+        up-cast on read — the parquet readers support widening
+        promotions, which plain ``mergeSchema`` rejects.
 
-        Fast path first: ONE ``mergeSchema`` read handles the common
-        cases (identical chains, additive drift) with a single
-        parallel footer pass — per-path sequential ``.schema`` probes
-        here measured ~1 s/micro-batch of pure planning overhead at 32
-        buckets. Only when mergeSchema raises its type-conflict error
-        (a since-widened column) does the per-chain unify path run.
+        The per-dir schemas come from the ``_schema.json`` sidecars,
+        so a read planned with ``spark.read.schema`` over them launches
+        no footer-inference job (one Spark job per read; per-job
+        overhead, not compute, bounds the streaming triggers). Only
+        dirs without a sidecar — written before sidecars existed — are
+        footer-inferred: one ``mergeSchema`` pass over those dirs, or
+        per-dir probes when mergeSchema raises its type-conflict error
+        (a since-widened column).
         """
-        strs = [str(p) for p in paths]
-        try:
-            return spark.read.option("mergeSchema", "true").parquet(*strs)
-        except Exception:  # type conflict: int-vs-long etc.
-            schemas = [spark.read.parquet(s).schema for s in strs]
-            return spark.read.schema(unify_schemas(schemas)).parquet(*strs)
+        schemas = []
+        legacy = []
+        for p in paths:
+            sch = _read_sidecar(p)
+            if sch is None:
+                legacy.append(str(p))
+            else:
+                schemas.append(sch)
+        if legacy:
+            try:
+                schemas.append(
+                    spark.read.option("mergeSchema", "true").parquet(*legacy).schema
+                )
+            except Exception:  # type conflict: int-vs-long etc.
+                schemas.extend(spark.read.parquet(s).schema for s in legacy)
+        return unify_schemas(schemas)
 
     # -- merge ------------------------------------------------------------
+
+    def _write_staged(self, df: DataFrame, staging: Path) -> None:
+        """Write ``df`` partitioned by bucket under ``staging`` (ONE
+        job) and give every staged bucket dir its schema sidecar —
+        before the writer's fenced ``check()`` and commit rename, so a
+        committed dir never lacks one."""
+        df.withColumn(BUCKET_COL, self.bucket_expr()).write.partitionBy(
+            BUCKET_COL
+        ).mode("overwrite").parquet(str(staging))
+        for d in staging.glob(f"{BUCKET_COL}=*"):
+            _write_sidecar(d, df.schema)
 
     def merge_batch(self, batch: DataFrame, merge_fn: MergeFn) -> None:
         """new state (touched buckets only) = merge_fn(state, batch).
@@ -321,9 +465,7 @@ class BucketedStateTable:
             new_state = merge_fn(state, batch.drop(BUCKET_COL))
             staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
             try:
-                new_state.withColumn(BUCKET_COL, self.bucket_expr()).write.partitionBy(
-                    BUCKET_COL
-                ).mode("overwrite").parquet(str(staging))
+                self._write_staged(new_state, staging)
                 check()  # fenced? abort BEFORE the first commit rename
                 for b in touched:
                     src = staging / f"{BUCKET_COL}={b}"
@@ -372,15 +514,11 @@ class BucketedStateTable:
         one full version (call it on a maintenance cadence, exactly
         like parquet small-file compaction — same tradeoff, same
         loop)."""
-        spark = batch.sparkSession  # noqa: F841 - parity with merge_batch
-        batch = batch.withColumn(BUCKET_COL, self.bucket_expr())
         staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
         created: list[Path] = []
         with self._writer() as check:
             try:
-                batch.write.partitionBy(BUCKET_COL).mode("overwrite").parquet(
-                    str(staging)
-                )
+                self._write_staged(batch, staging)
                 check()  # fenced? abort BEFORE the first commit rename
                 for src in sorted(staging.glob(f"{BUCKET_COL}=*")):
                     b = int(src.name.split("=")[1])
@@ -412,9 +550,7 @@ class BucketedStateTable:
             state = self._read_chains(spark, self._latest_paths(todo))
             staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
             try:
-                state.withColumn(BUCKET_COL, self.bucket_expr()).write.partitionBy(
-                    BUCKET_COL
-                ).mode("overwrite").parquet(str(staging))
+                self._write_staged(state, staging)
                 check()  # fenced? abort BEFORE the first commit rename
                 for b in todo:
                     src = staging / f"{BUCKET_COL}={b}"

@@ -668,3 +668,326 @@ def test_cdc_changes_since_keys_filter_prunes(spark):
     keys = spark.createDataFrame([(1,)], "k long")
     got = {(r.k, r.op) for r in target.changes_since(spark, wm, keys).collect()}
     assert got == {(1, "u")}
+
+
+# -- schema sidecars and bucket-version pruning -----------------------------
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs launched while ``fn`` runs. Job events reach the
+    status tracker through one in-order listener queue, so once a
+    marker job run afterwards is visible, every job ``fn`` launched is
+    too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    probe, marker = f"probe-{uuid.uuid4().hex}", f"marker-{uuid.uuid4().hex}"
+    sc.setJobGroup(probe, "job count probe")
+    try:
+        fn()
+        sc.setJobGroup(marker, "job count marker")
+        spark.range(4).repartition(2).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(marker):
+        assert time.monotonic() < deadline, "marker job never reached the tracker"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(probe))
+
+
+def _buckets_of(spark, target, keys) -> dict[int, int]:
+    """key -> the bucket ``target`` routes it to."""
+    df = spark.createDataFrame([(k,) for k in keys], "k long")
+    return dict(df.select("k", target.bucket_expr()).collect())
+
+
+def _strip_sidecars(path, keep=lambda d: False) -> int:
+    """Delete the sidecar of every version dir that ``keep`` rejects,
+    leaving it as state written before sidecars existed; returns how
+    many were deleted."""
+    from pathlib import Path
+
+    from db_cdc_poc_spark.streaming.state import SCHEMA_SIDECAR
+
+    n = 0
+    for f in sorted(Path(path).glob(f"bucket_*/v_*/{SCHEMA_SIDECAR}")):
+        if not keep(f.parent):
+            f.unlink()
+            n += 1
+    return n
+
+
+def test_state_reads_launch_no_spark_job(spark):
+    """Sidecar-pinned reads plan without footer inference: building
+    ``current``, ``state_for`` and an empty ``changes_since`` (no commit
+    since the watermark) launch zero Spark jobs; a real scan does."""
+    target = CdcTarget(
+        tempfile.mkdtemp(prefix="cdc_jobs_"),
+        keys="k", sequence_by="seq", apply_as_deletes="op = 'd'",
+        except_columns=["op"], num_buckets=4, keep_versions=4,
+    )
+    target.upsert_batch(spark.createDataFrame(
+        [(k, 1, "u", 10 * k) for k in range(20)], "k long, seq long, op string, v long"
+    ))
+    wm = target.state.commits()[-1]
+    assert _spark_jobs(spark, lambda: target.current(spark)) == 0
+    assert _spark_jobs(spark, lambda: target.state.state_for(spark)) == 0
+    rows = []
+    assert _spark_jobs(
+        spark, lambda: rows.extend(target.changes_since(spark, wm).collect())
+    ) == 0
+    assert rows == []
+    # the probe sees the scan itself
+    assert _spark_jobs(spark, lambda: target.current(spark).count()) >= 1
+
+
+def test_every_version_dir_carries_its_schema(spark):
+    """merge_batch, append_batch and snapshot each commit dirs whose
+    sidecar equals the schema footer inference reports for the dir."""
+    from db_cdc_poc_spark.streaming.state import (
+        SCHEMA_SIDECAR,
+        BucketedStateTable,
+        _read_sidecar,
+    )
+
+    t = BucketedStateTable(tempfile.mkdtemp(prefix="st_sc_"), keys=["k"], num_buckets=4)
+    # non-nullable nested fields: files read back all-nullable
+    rows = spark.createDataFrame(
+        [(k, f"v{k}") for k in range(12)], "k long, v string"
+    ).select("*", F.array(F.lit(1)).alias("a"), F.struct(F.lit(2).alias("x")).alias("s"))
+    t.merge_batch(rows, lambda s, b: b if s is None else s.unionByName(b))
+    t.append_batch(rows.limit(5))
+    assert t.snapshot(spark) > 0
+    dirs = sorted(t.path.glob("bucket_*/v_*"))
+    assert any(d.name.endswith(".d") for d in dirs)
+    for d in dirs:
+        assert (d / SCHEMA_SIDECAR).is_file(), d
+        assert _read_sidecar(d) == spark.read.parquet(str(d)).schema, d
+
+
+@pytest.mark.parametrize("legacy", ["all", "half"])
+def test_state_without_sidecars_reads_diffs_and_merges(spark, legacy):
+    """State written before sidecars existed (every dir, or a mix of
+    old and new dirs) still reads, diffs and merges through footer
+    inference — type widening across buckets included — and the dirs
+    later commits create carry sidecars."""
+    from db_cdc_poc_spark.streaming.cdc import state_diff
+    from db_cdc_poc_spark.streaming.state import SCHEMA_SIDECAR
+
+    target = CdcTarget(
+        tempfile.mkdtemp(prefix="cdc_legacy_"),
+        keys="k", sequence_by="seq", apply_as_deletes="op = 'd'",
+        except_columns=["op"], num_buckets=4, keep_versions=6,
+    )
+    target.upsert_batch(spark.createDataFrame(
+        [(k, 1, "u", 10 * k) for k in range(1, 9)], "k long, seq long, op string, qty int"
+    ))
+    c1 = target.state.commits()[-1]
+    # k=1's bucket widens qty to bigint; the other buckets stay int
+    target.upsert_batch(spark.createDataFrame(
+        [(1, 2, "u", 2**40)], "k long, seq long, op string, qty long"
+    ))
+    c2 = target.state.commits()[-1]
+
+    def keep(d):  # "half": even buckets keep their sidecars, odd ones lose them
+        return legacy == "half" and int(d.parent.name.split("_")[1]) % 2 == 0
+
+    assert _strip_sidecars(target.path, keep) > 0
+    if legacy == "all":
+        assert _spark_jobs(spark, lambda: target.current(spark)) >= 1
+
+    cur = target.current(spark)
+    assert dict(cur.dtypes)["qty"] == "bigint"
+    want = {k: 10 * k for k in range(2, 9)} | {1: 2**40}
+    assert {r.k: r.qty for r in cur.collect()} == want
+    assert {(r.k, r.op) for r in target.changes_since(spark, c1).collect()} == {(1, "u")}
+    assert {r.k: r.change_kind for r in state_diff(target, spark, c1, c2).collect()} == {
+        1: "changed"
+    }
+
+    target.upsert_batch(spark.createDataFrame(
+        [(2, 3, "u", 21), (3, 3, "d", 0), (9, 3, "u", 90)],
+        "k long, seq long, op string, qty int",
+    ))
+    want |= {2: 21, 9: 90}
+    del want[3]
+    assert {r.k: r.qty for r in target.current(spark).collect()} == want
+    delta = {(r.k, r.op) for r in target.changes_since(spark, c2).collect()}
+    assert delta == {(2, "u"), (3, "d"), (9, "c")}
+    touched = set(_buckets_of(spark, target, (2, 3, 9)).values())
+    for b in touched:
+        tip = target.state._versions(b)[-1]
+        assert (tip / SCHEMA_SIDECAR).is_file()
+
+
+def test_changes_since_payload_keeps_columns_of_unchanged_buckets(spark):
+    """Pruning reads only the changed buckets, but the before/after
+    structs still carry every column of the table: a column that only
+    an unchanged bucket holds appears NULL, so the output schema does
+    not depend on which buckets a trigger touched."""
+    target = CdcTarget(
+        tempfile.mkdtemp(prefix="cdc_cs_schema_"),
+        keys="k", sequence_by="seq", num_buckets=4, keep_versions=4,
+    )
+    target.upsert_batch(spark.createDataFrame(
+        [(k, 1, 10 * k) for k in range(12)], "k long, seq long, v long"
+    ))
+    buckets = _buckets_of(spark, target, range(12))
+    by_bucket = {}
+    for k in range(12):
+        by_bucket.setdefault(buckets[k], k)
+    (ka, kb, *_) = by_bucket.values()
+    target.upsert_batch(spark.createDataFrame(
+        [(ka, 2, 1, "x")], "k long, seq long, v long, extra string"
+    ))
+    wm = target.state.commits()[-1]
+    target.upsert_batch(spark.createDataFrame([(kb, 3, 7)], "k long, seq long, v long"))
+    assert target.state.changed_buckets(wm) == [buckets[kb]]
+    delta = target.changes_since(spark, wm)
+    assert delta.schema["after"].dataType.fieldNames() == ["seq", "v", "extra"]
+    [r] = delta.collect()
+    assert (r.k, r.op, r.before.v, r.after.v, r.after.extra) == (kb, "u", 10 * kb, 7, None)
+    # nothing changed since the latest commit: same columns, no rows
+    empty = target.changes_since(spark, target.state.commits()[-1])
+    assert empty.schema.simpleString() == delta.schema.simpleString()
+    assert empty.collect() == []
+
+
+def test_state_diff_reads_only_changed_buckets(spark):
+    """state_diff prunes to the buckets whose recorded version differs
+    between the two commits — one changed bucket, then one bucket
+    first written after the earlier commit — and equals the brute-force
+    diff of the two whole-table snapshots in both directions."""
+    from db_cdc_poc_spark.streaming.cdc import state_diff
+
+    target = CdcTarget(
+        tempfile.mkdtemp(prefix="cdc_diff_prune_"),
+        keys="k", sequence_by="seq", apply_as_deletes="op = 'd'",
+        except_columns=["op", "seq"], num_buckets=8, keep_versions=8,
+    )
+    schema = "k long, v string, op string, seq long"
+    buckets = _buckets_of(spark, target, range(40))
+    filled = sorted(set(buckets.values()))[:-1]  # leave one bucket empty
+    first = [k for k in range(40) if buckets[k] in filled]
+    target.upsert_batch(spark.createDataFrame([(k, "a", "u", 1) for k in first], schema))
+    one = filled[0]
+    in_one = [k for k in first if buckets[k] == one]
+    assert len(in_one) >= 2
+    target.upsert_batch(spark.createDataFrame(
+        [(in_one[0], "b", "u", 2), (in_one[1], "a", "d", 2)], schema
+    ))
+    late = [k for k in range(40) if buckets[k] not in filled]
+    target.upsert_batch(spark.createDataFrame([(k, "c", "u", 3) for k in late], schema))
+    c1, c2, c3 = target.state.commits()
+    assert target.state.changed_buckets(c1, c2) == [one]
+    assert target.state.changed_buckets(c2, c3) == [buckets[late[0]]]
+
+    def snapshot(c):
+        return {r.k: r.v for r in target.current_at(spark, c).collect()}
+
+    def brute(a, b):
+        sa, sb = snapshot(a), snapshot(b)
+        out = {k: "added" for k in sb.keys() - sa.keys()}
+        out |= {k: "removed" for k in sa.keys() - sb.keys()}
+        out |= {k: "changed" for k in sa.keys() & sb.keys() if sa[k] != sb[k]}
+        return out
+
+    for a, b in [(c1, c2), (c2, c1), (c2, c3), (c3, c2), (c1, c3), (c3, c3)]:
+        got = {r.k: r.change_kind for r in state_diff(target, spark, a, b).collect()}
+        assert got == brute(a, b), (a, b)
+
+
+def test_unify_schemas_merges_nested_fields_and_keeps_metadata(spark):
+    """Struct columns merge field by field at every depth (inside
+    arrays too), numerics widen, the first metadata seen for a field
+    wins, and a nested non-widenable conflict names its path."""
+    from pyspark.sql import types as T
+
+    from db_cdc_poc_spark.streaming.state import unify_schemas
+
+    def parse(ddl):
+        return T._parse_datatype_string(ddl)
+
+    a = parse("k long, s struct<a:int>, xs array<struct<p:int>>")
+    a = T.StructType([
+        T.StructField("k", T.LongType(), False, {"comment": "key"}), *a.fields[1:]
+    ])
+    b = parse("k long, s struct<a:bigint,b:string>, xs array<struct<p:int,q:double>>, v int")
+    got = unify_schemas([a, b])
+    want = parse(
+        "k long, s struct<a:bigint,b:string>, xs array<struct<p:int,q:double>>, v int"
+    )
+    assert got.simpleString() == want.simpleString()
+    assert got["k"].metadata == {"comment": "key"}
+    assert all(f.nullable for f in got.fields)
+    with pytest.raises(TypeError, match="'s.a'"):
+        unify_schemas([a, parse("k long, s struct<a:string>")])
+
+
+def test_nested_struct_drift_across_buckets(spark):
+    """A bucket first written after a struct column gained a field
+    holds the wider struct while older buckets hold the narrower one.
+    Whole-table reads, merges touching both shapes, and pruned diffs
+    that read only a narrow bucket all see the merged struct."""
+    from db_cdc_poc_spark.streaming.cdc import state_diff
+
+    target = CdcTarget(
+        tempfile.mkdtemp(prefix="cdc_nested_"),
+        keys="k", sequence_by="seq", num_buckets=4, keep_versions=8,
+    )
+    buckets = _buckets_of(spark, target, range(40))
+    ka = 0
+    kb = next(k for k in range(40) if buckets[k] != buckets[ka])
+    narrow, wide = "k long, seq long, s struct<a:int>", "k long, seq long, s struct<a:int,b:string>"
+    target.upsert_batch(spark.createDataFrame([(ka, 1, (1,))], narrow))
+    c1 = target.state.commits()[-1]
+    target.upsert_batch(spark.createDataFrame([(kb, 1, (2, "x"))], wide))
+    c2 = target.state.commits()[-1]
+
+    def rows(df):
+        return {r.k: r.s.asDict() for r in df.collect()}
+
+    cur = target.current(spark)
+    assert cur.schema["s"].dataType.fieldNames() == ["a", "b"]
+    assert rows(cur) == {ka: {"a": 1, "b": None}, kb: {"a": 2, "b": "x"}}
+
+    # only the narrow bucket changes: the pruned diff reads it alone
+    target.upsert_batch(spark.createDataFrame([(ka, 2, (5,))], narrow))
+    c3 = target.state.commits()[-1]
+    assert target.state.changed_buckets(c2) == [buckets[ka]]
+    [r] = target.changes_since(spark, c2).collect()
+    assert (r.k, r.op) == (ka, "u")
+    assert (r.before.s.asDict(), r.after.s.asDict()) == (
+        {"a": 1, "b": None}, {"a": 5, "b": None}
+    )
+    assert {r.k: r.change_kind for r in state_diff(target, spark, c2, c3).collect()} == {
+        ka: "changed"
+    }
+
+    # one batch touching both shapes
+    target.upsert_batch(spark.createDataFrame([(ka, 3, (7, "z")), (kb, 3, (8, "w"))], wide))
+    c4 = target.state.commits()[-1]
+    assert rows(target.current(spark)) == {ka: {"a": 7, "b": "z"}, kb: {"a": 8, "b": "w"}}
+    assert {r.k: r.change_kind for r in state_diff(target, spark, c1, c4).collect()} == {
+        ka: "changed", kb: "added"
+    }
+    assert {(r.k, r.op) for r in target.changes_since(spark, c3).collect()} == {
+        (ka, "u"), (kb, "u")
+    }
+
+
+def test_state_reads_keep_column_metadata(spark):
+    """Column metadata the writer's schema carries survives sidecar
+    reads, as it did footer-inferred ones."""
+    target = CdcTarget(
+        tempfile.mkdtemp(prefix="cdc_meta_"),
+        keys="k", sequence_by="seq", num_buckets=4,
+    )
+    batch = spark.createDataFrame(
+        [(k, 1, k) for k in range(8)], "k long, seq long, v long"
+    ).withMetadata("v", {"comment": "on hand"})
+    target.upsert_batch(batch)
+    assert target.current(spark).schema["v"].metadata == {"comment": "on hand"}
