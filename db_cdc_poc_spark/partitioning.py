@@ -227,7 +227,7 @@ def estimated_scan_width(df: DataFrame) -> int | None:
 #: at sf0.1 a 580 KB documents table round-tripped through 32 tasks
 #: spends more wall on task launch + GC-amplification than on work, and
 #: the 8-core bench beat the 32-core one on every spread-heavy query
-#: (PERF_r13 scaling ratios 0.56-0.81). 128 KB/task ~= 3-12 MB of
+#: (round-13 scaling ratios 0.56-0.81). 128 KB/task ~= 3-12 MB of
 #: generated fan-out rows per task; at sf1+ every spread table already
 #: exceeds cores * 128 KB, so the cluster-scale behavior (spread to full
 #: parallelism) is unchanged.

@@ -117,7 +117,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # to core count: a sub-MB table fanned out to 32 tasks pays
         # more in task launch + exchange than the fan-out work costs —
         # the measured cause of the r13 8-core-beats-32-core inversion
-        # (PERF_r13 scaling ratios 0.56-0.81 on every spread-heavy
+        # (round-13 scaling ratios 0.56-0.81 on every spread-heavy
         # query). At sf1+ the tables exceed cores * 128 KB and the
         # target is full parallelism, unchanged from before.
         from db_cdc_poc_spark.partitioning import (

@@ -23,7 +23,6 @@ columns.
 
 from __future__ import annotations
 
-import tempfile
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -146,50 +145,16 @@ class CdcTarget:
             raise ValueError(f"CDC target {self.path} empty at commit {commit}")
         return self._applied(state)
 
-    def _diff_sides(
-        self, spark: SparkSession, commit: int, to_commit: int | None = None
-    ) -> tuple[DataFrame, DataFrame, bool]:
-        """``(old, new, changed)``: the applied views at ``commit`` and
-        at ``to_commit`` (``None``: now), both under the union of the
-        whole table's schemas at the two points (numerics widened,
-        nested fields merged), so a diff's columns never depend on
-        which buckets it reads. Only the buckets whose chain tip
-        differs between the two points are read — an unchanged bucket
-        cannot hold a changed key. With none differing the diff is
-        empty: ``changed`` is False and both sides are the same
-        zero-row plan over the whole-table read (no scan, no job) for
-        the caller to select its empty result from, without a join."""
-        st = self.state
-        changed = st.changed_buckets(commit, to_commit)
-        new = st.state_for(spark) if to_commit is None else st.state_at(spark, to_commit)
-        if new is None:
-            raise ValueError(f"CDC target {self.path} has no state yet")
-        if not changed:
-            # same tips at both points: same dirs, same schema
-            new = self._applied(new.limit(0))
-            return new, new, False
-        old = st.state_at(spark, commit)
-        if old is None:
-            raise ValueError(f"CDC target {self.path} empty at commit {commit}")
-        schema = unify_schemas([old.schema, new.schema])
-        old = st.state_at(spark, commit, changed, schema)
-        new = (
-            st.state_for(spark, changed, schema)
-            if to_commit is None
-            else st.state_at(spark, to_commit, changed, schema)
-        )
-        # a side with no chain in these buckets has no rows there
-        old = old if old is not None else new.limit(0)
-        new = new if new is not None else old.limit(0)
-        return self._applied(old), self._applied(new), True
-
     def changes_since(
         self,
         spark: SparkSession,
         commit: int | None,
         keys_filter: DataFrame | None = None,
+        to_commit: int | None = None,
     ) -> DataFrame:
-        """Applied-state delta between a committed watermark and now:
+        """Applied-state delta between a committed watermark and
+        ``to_commit`` (``None``: the latest commit, resolved once, so
+        the changed-bucket list and the data come from one record):
         one ``(keys..., op, before, after)`` row per key whose applied
         row changed — ``op`` 'c' (new key), 'u' (payload changed), 'd'
         (delete applied); ``before``/``after`` are structs of the
@@ -205,15 +170,18 @@ class CdcTarget:
         state delta against the last FOLDED commit covers the
         trigger's whole effect no matter which attempt wrote it, and a
         replayed identical upsert yields an empty delta (fold is a
-        no-op). Retention: ``keep_versions`` must cover the fold's
-        watermark lag plus crash slack.
+        no-op) — provided the folder advances its watermark to the
+        ``to_commit`` it diffed up to. Retention: ``keep_versions``
+        must cover the fold's watermark lag plus crash slack.
 
-        The diff is pruned by bucket version: only buckets whose chain
-        tip moved since ``commit`` are read and joined, and with none
-        moved the empty result is planned without a scan or a join. The
-        payload structs still carry every column of the whole table at
-        either point, so the output schema does not depend on which
-        buckets changed.
+        The diff is pruned by bucket version: only buckets whose
+        recorded tip moved between the two commits are read and
+        joined, and with none moved the empty result is planned without
+        a scan or a join. The payload structs still carry every column
+        of the whole table at either point, so the output schema does
+        not depend on which buckets changed. Additive evolution (a
+        column added or int->long widened between the two commits)
+        reads NULL/widened on the side that predates it.
 
         ``commit=None`` means "everything" (every applied row as 'c').
         ``keys_filter`` (a DataFrame of key columns) prunes the diff to
@@ -229,8 +197,13 @@ class CdcTarget:
                 F.broadcast(keys_filter.select(*self.keys).distinct()), self.keys
             )
 
+        if to_commit is None:
+            commits = self.state.commits()
+            if not commits:
+                raise ValueError(f"CDC target {self.path} has no state yet")
+            to_commit = commits[-1]
         if commit is None:
-            new = _keyed(self.current(spark))
+            new = _keyed(self.current_at(spark, to_commit))
             payload_fields = [
                 f for f in new.schema.fields if f.name not in self.keys
             ]
@@ -242,16 +215,16 @@ class CdcTarget:
                 .alias("before"),
                 F.struct(*[f.name for f in payload_fields]).alias("after"),
             )
-        # payload = every non-key column of both sides, which share the
-        # union of the whole table's schemas at the two points:
-        # upsert_batch supports additive evolution, so a column added
-        # (or int->long widened) between the watermark commit and now
-        # reads NULL/widened on the old side — same contract as
-        # state_diff below
-        old, new, changed = self._diff_sides(spark, commit)
-        val_fields = [f for f in new.schema.fields if f.name not in self.keys]
+        st = self.state
+        changed = st.changed_buckets(commit, to_commit)
+        new = st.state_at(spark, to_commit)
+        if new is None:
+            raise ValueError(f"CDC target {self.path} empty at commit {to_commit}")
         if not changed:
-            # zero rows over one pinned read: no scan, no join, no job
+            # same tips at both points: zero rows over one pinned read —
+            # no scan, no join, no job
+            new = self._applied(new.limit(0))
+            val_fields = [f for f in new.schema.fields if f.name not in self.keys]
             none = F.lit(None).cast(T.StructType(val_fields))
             return new.select(
                 *self.keys,
@@ -259,6 +232,20 @@ class CdcTarget:
                 none.alias("before"),
                 none.alias("after"),
             )
+        old = st.state_at(spark, commit)
+        if old is None:
+            raise ValueError(f"CDC target {self.path} empty at commit {commit}")
+        # both sides under the union of the whole table's schemas at the
+        # two points, read only in the changed buckets (an unchanged
+        # bucket cannot hold a changed key)
+        schema = unify_schemas([old.schema, new.schema])
+        old = st.state_at(spark, commit, changed, schema)
+        new = st.state_at(spark, to_commit, changed, schema)
+        # a side with no chain in these buckets has no rows there
+        old = old if old is not None else new.limit(0)
+        new = new if new is not None else old.limit(0)
+        old, new = self._applied(old), self._applied(new)
+        val_fields = [f for f in new.schema.fields if f.name not in self.keys]
         payload = F.struct(*[f.name for f in val_fields])
         n = _keyed(new).select(*self.keys, payload.alias("after"))
         o = _keyed(old).select(*self.keys, payload.alias("before"))
@@ -370,38 +357,18 @@ def state_diff(
     keyed sink must answer (Delta's table-changes / CDF analogue on
     the bucketed state store).
 
-    Full outer join of the two time-travel snapshots on the target's
-    keys, classified per key: ``added`` (only in ``to``), ``removed``
+    A projection of ``target.changes_since(spark, from_commit,
+    to_commit=to_commit)``: ``added`` (only in ``to``), ``removed``
     (only in ``from`` — a delete applied in between), ``changed`` (both
-    sides present, any non-key column differs). Unchanged keys are
-    dropped. Only buckets whose recorded version differs between the
-    two commit records are read (an unchanged bucket cannot differ).
-    One shuffle on the keys; at production keyspace both snapshots
-    come off the same bucket layout, so the join co-locates.
+    sides present, any non-key column differs, columns added in between
+    included). Unchanged keys are dropped, and either direction works.
 
     Output: key columns + ``change_kind``.
     """
-    a, b, changed = target._diff_sides(spark, from_commit, to_commit)
-    keys = target.keys
-    if not changed:
-        # zero rows over one pinned read: no scan, no join, no job
-        return b.select(*keys, F.lit(None).cast("string").alias("change_kind"))
-    # value columns = every non-key column: both sides share the union
-    # of the two snapshots' schemas, since the sink supports additive
-    # schema evolution and a column added between the commits must
-    # participate (NULL on the side that predates it) or a row whose
-    # only change is in the new column would diff as unchanged
-    vals = F.struct(*[c for c in b.columns if c not in keys])
-    sa = a.select(*keys, vals.alias("__va"))
-    sb = b.select(*keys, vals.alias("__vb"))
-    joined = sa.join(sb, keys, "full_outer")
+    delta = target.changes_since(spark, from_commit, to_commit=to_commit)
     kind = (
-        F.when(F.col("__va").isNull(), F.lit("added"))
-        .when(F.col("__vb").isNull(), F.lit("removed"))
-        .when(F.col("__va") != F.col("__vb"), F.lit("changed"))
+        F.when(F.col("op") == "c", F.lit("added"))
+        .when(F.col("op") == "d", F.lit("removed"))
+        .when(F.col("op") == "u", F.lit("changed"))
     )
-    return (
-        joined.withColumn("change_kind", kind)
-        .filter(F.col("change_kind").isNotNull())
-        .select(*keys, "change_kind")
-    )
+    return delta.select(*target.keys, kind.alias("change_kind"))

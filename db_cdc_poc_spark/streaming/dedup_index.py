@@ -83,6 +83,15 @@ def _bucket_of(d: Path) -> int:
     return int(d.parent.name.split("_")[1])
 
 
+def _chains_by_bucket(table: BucketedStateTable) -> dict[int, list[Path]]:
+    """Bucket -> readable chain at the table's latest commit record
+    (one record resolution for the whole table)."""
+    out: dict[int, list[Path]] = {}
+    for d in table.chain_dirs_for():
+        out.setdefault(_bucket_of(d), []).append(d)
+    return out
+
+
 class StreamingDedupIndex:
     """Persisted LSH band index + per-batch novelty decisions."""
 
@@ -536,19 +545,17 @@ class StreamingDedupIndex:
 
     def _max_delta_chain(self) -> int:
         """Longest un-compacted delta chain across both tables' buckets
-        (directory listings only — no data read). The compaction
-        cadence keys off THIS, not just the in-memory batch counter:
-        the counter dies with the process, so a crash-looping ingester
-        restarting every few triggers would defer compaction forever,
-        and crashed-and-re-fired triggers append deltas the counter
-        never saw. Disk-derived cadence is restart-proof and
-        self-heals crash-inflated chains on the next batch."""
+        (each table's latest record and its bucket listings — no data
+        read). The compaction cadence keys off THIS, not just the
+        in-memory batch counter: the counter dies with the process, so
+        a crash-looping ingester restarting every few triggers would
+        defer compaction forever, and crashed-and-re-fired triggers
+        append deltas the counter never saw. Disk-derived cadence is
+        restart-proof and self-heals crash-inflated chains on the next
+        batch."""
         n = 0
         for table in (self.state, self.sigs):
-            for b in range(table.num_buckets):
-                chain = table.chain_dirs_for([b])
-                if not chain:
-                    continue
+            for chain in _chains_by_bucket(table).values():
                 deltas = len(chain) - (0 if chain[0].name.endswith(".d") else 1)
                 n = max(n, deltas)
         return n
@@ -591,23 +598,21 @@ class StreamingDedupIndex:
     def _compact_table(spark: SparkSession, table: BucketedStateTable, bloom: BloomFront) -> int:
         # record each to-be-folded chain and pull its Blooms into the
         # cache BEFORE snapshot prunes the source dirs off disk
-        pre = {
-            b: table.chain_dirs_for([b]) for b in range(table.num_buckets)
-        }
         todo = {
             b: chain
-            for b, chain in pre.items()
-            if len(chain) > 1 or any(p.name.endswith(".d") for p in chain)
+            for b, chain in _chains_by_bucket(table).items()
+            if chain[-1].name.endswith(".d")
         }
         unionable = {
             b: all(bloom.loadable(d) for d in chain)
             for b, chain in todo.items()
         }
         n = table.snapshot(spark)
+        post = _chains_by_bucket(table)
         for b, chain in todo.items():
             if not unionable[b]:
                 continue  # a source lacked a Bloom: snapshot stays unprunable
-            new = table.chain_dirs_for([b])
+            new = post.get(b, [])
             if len(new) == 1:
                 bloom.union_write(new[0], chain)
         return n

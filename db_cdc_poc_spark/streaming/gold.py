@@ -146,8 +146,9 @@ class ChangelogFoldedAggregate:
       because a key's applied row can only change in a trigger whose
       batch contains that key; pass ``None`` after a recovery gap
       whose batches are unknown (one state-bounded catch-up diff).
-    * the fold advances the watermark to the target's latest commit;
-      folding twice without an upsert in between is a no-op.
+    * the fold diffs up to the target's latest commit as of its start
+      and advances the watermark to exactly that commit; folding twice
+      without an upsert in between is a no-op.
 
     Retention contract: the target's ``keep_versions`` must cover the
     fold's watermark lag plus crash slack — if the watermark commit
@@ -163,9 +164,10 @@ class ChangelogFoldedAggregate:
     MIN/MAX measures (``min_cols``/``max_cols``) are maintained by the
     companion rule ``delta_minmax``: inserts fold with least/greatest,
     and ONLY groups whose retraction ties the stored extreme rescan —
-    against the target's own applied state (``target.current``), which
-    after the trigger's upsert IS the post-batch fact table the rule
-    requires, key-pruned by the broadcast semi-join. This covers the
+    against the target's own applied state at the fold's end commit
+    (``target.current_at``), which after the trigger's upsert IS the
+    post-batch fact table the rule requires, key-pruned by the
+    broadcast semi-join. This covers the
     reference's gold shape (MAX(date_time),
     notebooks/04_Current_Inventory.sql:17) under deletes — the
     aggregate a sum/count-only fold cannot maintain (VERDICT r11 ask
@@ -230,8 +232,11 @@ class ChangelogFoldedAggregate:
         returns (and pins) the refreshed aggregate."""
         from db_cdc_poc_spark.operators.ivm import delta_aggregate
 
+        # pin the end commit BEFORE the diff: an upsert landing while
+        # this fold runs stays above the new watermark for the next fold
+        end = (self.target.state.commits() or [None])[-1]
         delta = self.target.changes_since(
-            spark, self._watermark, keys_filter=batch_keys
+            spark, self._watermark, keys_filter=batch_keys, to_commit=end
         )
 
         def _dims(side: str):
@@ -267,17 +272,15 @@ class ChangelogFoldedAggregate:
             # Python-worker scan in EVERY later trigger's fold plan
             self._agg = local_df(spark, new_agg.collect(), new_agg.schema)
         if self.min_cols or self.max_cols:
-            self._fold_minmax(spark, delta)
-        commits = self.target.state.commits()
-        if commits:
-            self._watermark = commits[-1]
+            self._fold_minmax(spark, delta, end)
+        self._watermark = end
         return self.current(spark)
 
-    def _fold_minmax(self, spark: SparkSession, delta: DataFrame) -> None:
+    def _fold_minmax(self, spark: SparkSession, delta: DataFrame, end: int) -> None:
         from db_cdc_poc_spark.operators.ivm import delta_minmax
 
         mm_cols = list(dict.fromkeys([*self.min_cols, *self.max_cols]))
-        facts = self.target.current(spark)  # post-upsert applied state
+        facts = self.target.current_at(spark, end)  # applied state the delta ends at
 
         def _mm_struct(side: str):
             # native types (no cast): timestamp/decimal extremes must

@@ -13,9 +13,26 @@ deterministic across sessions. Each bucket is an independent version
 chain; a micro-batch rewrites ONLY the chains its keys hash into, so
 merge I/O is O(|touched state|) rather than O(|total state|). Versioned
 directories exist because Spark cannot overwrite a parquet path it is
-concurrently reading; the per-bucket directory rename is the commit
-(atomic on local FS/HDFS; swap for the store's commit protocol — or for
-Delta/Iceberg MERGE — on object stores).
+concurrently reading.
+
+The latest commit record (``_commits/commit_N.json``: every bucket's
+tip version) is the table's only "now". Every read resolves it once
+and reads each bucket's chain up to the recorded tip. All writers
+(``merge_batch``, ``append_batch``, ``snapshot``) commit through one
+routine, ``_commit``: stage the new bucket dirs (with sidecars) and
+run the fenced lease ``check()``; in each written bucket delete any
+dir above the recorded tip, then rename the staged dir to the next
+version; write the record (write-then-rename, atomic — THE commit
+point) as the previous record plus the renamed dirs; only then prune
+old versions (``keep_versions``) and the records naming them.
+
+So a reader never sees half of a multi-bucket commit, and the latest
+record stays readable at every instant. A dir renamed but never
+recorded (a writer crashed before its record) is invisible, and the
+next writer of its bucket deletes it. Ids below the oldest retained
+record raise ``StateVersionVacuumedError``; the latest record is never
+pruned. Renames are atomic on local FS/HDFS; swap for the store's
+commit protocol — or Delta/Iceberg MERGE — on object stores.
 
 Every version dir carries its schema as a ``_schema.json`` sidecar,
 written into the staged dir before the commit rename, so it is as
@@ -231,49 +248,45 @@ class BucketedStateTable:
     def _versions(self, b: int) -> list[Path]:
         return sorted(p for p in self._bucket_dir(b).glob("v_*") if p.is_dir())
 
-    @staticmethod
-    def _vnum(p: Path) -> int:
-        """Version number of ``v_00000007`` or ``v_00000007.d``."""
-        return int(p.name[2:].split(".")[0])
-
-    def _chain_dirs(self, b: int, upto_name: str | None = None) -> list[Path]:
-        """The READABLE set of one bucket: its last FULL snapshot (a
-        ``v_N`` dir) plus every DELTA (``v_N.d``, written by
-        :meth:`append_batch`) after it — LSM semantics. A chain with
-        no snapshot yet is all deltas. ``upto_name`` (a ``v_...`` dir
-        name) restricts the chain for time travel."""
-        vs = self._versions(b)
-        if upto_name is not None:
-            vs = [p for p in vs if p.name <= upto_name]
-        start = 0
-        for i in range(len(vs) - 1, -1, -1):
-            if not vs[i].name.endswith(".d"):
-                start = i
-                break
-        return vs[start:]
-
-    def _latest_paths(self, buckets: Sequence[int] | None = None) -> list[Path]:
-        out: list[Path] = []
-        for b in range(self.num_buckets) if buckets is None else buckets:
-            out.extend(self._chain_dirs(b))
-        return out
+    def _chains(
+        self, versions: dict[int, str], buckets: Sequence[int] | None = None
+    ) -> list[Path]:
+        """The dirs a commit record's ``versions`` make readable (only
+        ``buckets``' when given): per bucket, the last FULL snapshot
+        (``v_N``) up to the recorded tip plus every DELTA (``v_N.d``,
+        from :meth:`append_batch`) after it — LSM semantics; all deltas
+        before a first snapshot. Dirs above the tip were never recorded
+        and stay invisible. Raises ``StateVersionVacuumedError`` when a
+        recorded version is gone."""
+        paths: list[Path] = []
+        for b, tip in sorted(versions.items()):
+            if buckets is not None and b not in buckets:
+                continue
+            vs = [p for p in self._versions(b) if p.name <= f"v_{tip}"]
+            if not vs or vs[-1].name != f"v_{tip}":
+                raise StateVersionVacuumedError(
+                    f"bucket {b} v{tip} was vacuumed (keep_versions="
+                    f"{self.keep_versions}); raise keep_versions to retain history"
+                )
+            fulls = [i for i, p in enumerate(vs) if not p.name.endswith(".d")]
+            paths.extend(vs[fulls[-1] if fulls else 0:])
+        return paths
 
     def chain_dirs_for(self, buckets: Sequence[int] | None = None) -> list[Path]:
-        """Public view of the readable version-dir set (latest full
-        snapshot + later deltas per bucket) — for callers that prune
-        dirs with their own side metadata (e.g. the dedup index's
-        per-version Bloom front) before handing a subset to
-        :meth:`read_dirs`. Version dirs are immutable once committed,
-        so per-dir metadata and caches keyed on them stay valid."""
-        return self._latest_paths(buckets)
+        """Public view of the readable version-dir set at the latest
+        commit record (full snapshot + later deltas per bucket, in
+        bucket order) — for callers that prune dirs with their own side
+        metadata (e.g. the dedup index's per-version Bloom front)
+        before handing a subset to :meth:`read_dirs`. Version dirs are
+        immutable once recorded, so per-dir metadata and caches keyed
+        on them stay valid."""
+        return self._chains(self._latest()[1], buckets)
 
     def read_dirs(self, spark: SparkSession, dirs: Sequence[Path]) -> DataFrame | None:
         """Read an explicit subset of version dirs (from
         :meth:`chain_dirs_for`) under one reconciled schema; ``None``
         for an empty subset. Safe only for APPEND-ONLY state, where
         skipping a version dir skips whole rows, never an update."""
-        if not dirs:
-            return None
         return self._read_chains(spark, list(dirs))
 
     # -- commit log / time travel -----------------------------------------
@@ -283,32 +296,20 @@ class BucketedStateTable:
         d.mkdir(exist_ok=True)
         return d
 
+    def _record_path(self, commit: int) -> Path:
+        return self._commits_dir() / f"commit_{commit:08d}.json"
+
     def commits(self) -> list[int]:
-        """Committed merge ids, ascending (empty for a fresh table)."""
+        """Retained commit ids, ascending (empty for a fresh table);
+        the last one is the table's current state."""
         return sorted(
             int(p.stem.split("_")[1]) for p in self._commits_dir().glob("commit_*.json")
         )
 
-    def _record_commit(self) -> int:
-        """Append a commit record: the latest version of EVERY live
-        chain after this merge — a consistent table-wide snapshot id.
-        One tiny JSON per commit (directory listing, no data read);
-        the write-then-rename makes the record's appearance atomic."""
-        versions = {str(b): v for b, v in self._tip_versions().items()}
-        n = (self.commits() or [-1])[-1] + 1
-        tmp = self._commits_dir() / f".commit_{n:08d}.json.tmp"
-        tmp.write_text(json.dumps({"commit": n, "versions": versions}))
-        tmp.rename(self._commits_dir() / f"commit_{n:08d}.json")
-        return n
-
-    def _commit_versions(self, commit: int) -> dict[int, str]:
+    def _read_record(self, commit: int) -> dict[int, str]:
         """Bucket -> tip version name (``"00000007"`` or
-        ``"00000007.d"``) recorded by ``commit``; raises ``KeyError``
-        for an unknown commit."""
-        rec = self._commits_dir() / f"commit_{commit:08d}.json"
-        if not rec.is_file():
-            raise KeyError(f"no commit {commit}; have {self.commits()}")
-        versions = json.loads(rec.read_text())["versions"]
+        ``"00000007.d"``) recorded by ``commit``."""
+        versions = json.loads(self._record_path(commit).read_text())["versions"]
         # older commit files recorded ints; newer record the dir name
         # suffix (which may mark a delta, "00000007.d")
         return {
@@ -316,22 +317,51 @@ class BucketedStateTable:
             for b, v in versions.items()
         }
 
-    def _tip_versions(self) -> dict[int, str]:
-        """Bucket -> current tip version name (``"00000007"`` or
-        ``"00000007.d"``), the form commit records hold."""
-        return {
-            b: vs[-1].name[2:]
-            for b in range(self.num_buckets)
-            if (vs := self._versions(b))
-        }
+    def _latest(self) -> tuple[int, dict[int, str]]:
+        """``(id, versions)`` of the latest commit record — the table's
+        only "now"; ``(-1, {})`` before the first commit."""
+        while True:
+            ids = self.commits()
+            if not ids:
+                return -1, {}
+            try:
+                return ids[-1], self._read_record(ids[-1])
+            except FileNotFoundError:
+                continue  # pruned after the listing: a newer record exists
+
+    def _commit_versions(self, commit: int) -> dict[int, str]:
+        """``commit``'s recorded versions; ``StateVersionVacuumedError``
+        for an id below the oldest retained record, ``KeyError`` for an
+        unknown one."""
+        try:
+            return self._read_record(commit)
+        except FileNotFoundError:
+            ids = self.commits()
+            if ids and commit < ids[0]:
+                raise StateVersionVacuumedError(
+                    f"commit {commit} was pruned (keep_versions="
+                    f"{self.keep_versions}); raise keep_versions to retain history"
+                ) from None
+            raise KeyError(f"no commit {commit}; have {ids}") from None
+
+    def _record_commit(self, commit: int, versions: dict[int, str]) -> None:
+        """Write commit record ``commit``: every bucket's tip version.
+        Its appearance (write-then-rename, atomic) is THE commit point
+        of a write."""
+        tmp = self._commits_dir() / f".commit_{commit:08d}.json.tmp"
+        tmp.write_text(json.dumps({
+            "commit": commit,
+            "versions": {str(b): v for b, v in sorted(versions.items())},
+        }))
+        tmp.rename(self._record_path(commit))
 
     def changed_buckets(self, commit: int, to_commit: int | None = None) -> list[int]:
-        """Buckets whose chain tip differs between ``commit`` and
-        ``to_commit`` (``None``: now). Version dirs are immutable and
-        never renumbered, so a bucket outside this list reads exactly
-        the same rows at both points — diffs need scan only these."""
+        """Buckets whose recorded tip differs between ``commit`` and
+        ``to_commit`` (``None``: the latest record). Recorded dirs are
+        immutable, so a bucket outside this list reads exactly the same
+        rows at both points — diffs need scan only these."""
         a = self._commit_versions(commit)
-        b = self._tip_versions() if to_commit is None else self._commit_versions(to_commit)
+        b = self._latest()[1] if to_commit is None else self._commit_versions(to_commit)
         return sorted(k for k in a.keys() | b.keys() if a.get(k) != b.get(k))
 
     def state_at(
@@ -347,28 +377,14 @@ class BucketedStateTable:
         wider read's) replaces the one the dirs record, so a pruned
         read lines up column for column with that wider read.
 
-        Reads each bucket's version recorded in that commit's snapshot.
         Retention is bounded by ``keep_versions`` (exactly Delta's
         vacuum tradeoff): raise it on tables whose history must stay
-        queryable, or raise ``StateVersionVacuumedError`` when a
-        recorded version is gone.
+        queryable. A commit whose versions are gone raises
+        ``StateVersionVacuumedError``.
         """
-        versions = self._commit_versions(commit)
-        if buckets is not None:
-            versions = {b: versions[b] for b in buckets if b in versions}
-        paths = []
-        for b, name in versions.items():
-            tip = self._bucket_dir(b) / f"v_{name}"
-            chain = self._chain_dirs(b, upto_name=f"v_{name}")
-            if not tip.is_dir() or not chain or chain[-1] != tip:
-                raise StateVersionVacuumedError(
-                    f"bucket {b} v{name} was vacuumed (keep_versions="
-                    f"{self.keep_versions}); raise keep_versions to retain history"
-                )
-            paths.extend(chain)
-        if not paths:
-            return None
-        return self._read_chains(spark, paths, schema)
+        return self._read_chains(
+            spark, self._chains(self._commit_versions(commit), buckets), schema
+        )
 
     def state_for(
         self,
@@ -376,22 +392,21 @@ class BucketedStateTable:
         buckets: Sequence[int] | None = None,
         schema: T.StructType | None = None,
     ) -> DataFrame | None:
-        """Latest state of the given buckets (all buckets if None);
-        ``None`` when no chain exists yet. ``schema``: as in
-        :meth:`state_at`."""
-        paths = self._latest_paths(buckets)
-        if not paths:
-            return None
-        return self._read_chains(spark, paths, schema)
+        """:meth:`state_at` the latest commit record; ``None`` before
+        the first commit."""
+        return self._read_chains(spark, self.chain_dirs_for(buckets), schema)
 
     def _read_chains(
         self,
         spark: SparkSession,
         paths: Sequence[Path],
         schema: T.StructType | None = None,
-    ) -> DataFrame:
+    ) -> DataFrame | None:
         """Read bucket chains under one reconciled schema (see
-        :meth:`_schema_of`), or under ``schema`` when given."""
+        :meth:`_schema_of`), or under ``schema`` when given; ``None``
+        for no chains."""
+        if not paths:
+            return None
         if schema is None:
             schema = self._schema_of(spark, paths)
         return spark.read.schema(schema).parquet(*map(str, paths))
@@ -446,13 +461,75 @@ class BucketedStateTable:
         for d in staging.glob(f"{BUCKET_COL}=*"):
             _write_sidecar(d, df.schema)
 
+    def _commit(
+        self,
+        df: DataFrame,
+        check: Callable[[], None],
+        base: tuple[int, dict[int, str]],
+        delta: bool = False,
+    ) -> list[Path]:
+        """The one commit routine of every writer (module docstring):
+        stage ``df`` → ``check()`` → rename → record → prune, on top
+        of ``base``, the latest record the writer read. Returns the
+        new version dirs."""
+        staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
+        try:
+            self._write_staged(df, staging)
+            check()  # fenced? abort BEFORE the first commit rename
+            commit, versions = base[0] + 1, dict(base[1])
+            written, created = [], []
+            for src in sorted(staging.glob(f"{BUCKET_COL}=*")):
+                b = int(src.name.split("=")[1])
+                written.append(b)
+                tip = versions.get(b)
+                bucket = self._bucket_dir(b)
+                bucket.mkdir(exist_ok=True)
+                for orphan in bucket.glob("v_*"):
+                    if tip is None or orphan.name > f"v_{tip}":
+                        shutil.rmtree(orphan, ignore_errors=True)
+                n = 0 if tip is None else int(tip.split(".")[0]) + 1
+                versions[b] = f"{n:08d}" + (".d" if delta else "")
+                created.append(src.rename(bucket / f"v_{versions[b]}"))
+            self._record_commit(commit, versions)
+            self._prune(written)
+            return created
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    def _prune(self, buckets: Sequence[int]) -> None:
+        """Retention, after the record: per bucket keep the last
+        ``keep_versions`` FULL snapshots plus every delta newer than the
+        oldest kept one; vacuum the rest. Then delete the newest record
+        naming a vacuumed dir and every record before it. The latest
+        record names only live dirs, so ``commits()[-1] + 1`` stays the
+        next id."""
+        cutoffs: dict[int, str] = {}
+        for b in buckets:
+            fulls = [p for p in self._versions(b) if not p.name.endswith(".d")]
+            if len(fulls) <= self.keep_versions:
+                continue
+            cutoffs[b] = fulls[-self.keep_versions].name[2:]
+            for old in self._versions(b):
+                if old.name < f"v_{cutoffs[b]}":
+                    shutil.rmtree(old, ignore_errors=True)
+        if not cutoffs:
+            return
+        ids = self.commits()[:-1]
+        for i in range(len(ids) - 1, -1, -1):
+            v = self._read_record(ids[i])
+            if any(b in v and v[b] < cut for b, cut in cutoffs.items()):
+                for n in ids[: i + 1]:
+                    self._record_path(n).unlink(missing_ok=True)
+                return
+
     def merge_batch(self, batch: DataFrame, merge_fn: MergeFn) -> None:
         """new state (touched buckets only) = merge_fn(state, batch).
 
         Reads only the chains the batch's keys hash into, writes the
         callback's result partitioned by bucket in ONE job, then commits
-        each touched chain's next version by directory rename. The
-        callback sees plain key rows — no bucket column on either side.
+        each touched chain's next version (:meth:`_commit`). A bucket
+        the callback returns no rows for keeps its chain. The callback
+        sees plain key rows — no bucket column on either side.
         """
         spark = batch.sparkSession
         batch = batch.withColumn(BUCKET_COL, self.bucket_expr())
@@ -461,39 +538,9 @@ class BucketedStateTable:
         if not touched:
             return
         with self._writer() as check:
-            state = self.state_for(spark, touched)
-            new_state = merge_fn(state, batch.drop(BUCKET_COL))
-            staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
-            try:
-                self._write_staged(new_state, staging)
-                check()  # fenced? abort BEFORE the first commit rename
-                for b in touched:
-                    src = staging / f"{BUCKET_COL}={b}"
-                    if not src.is_dir():
-                        # merge produced no rows for this bucket (e.g. batch
-                        # keys unknown to an inner-join merge) — chain unchanged
-                        continue
-                    versions = self._versions(b)
-                    next_n = self._vnum(versions[-1]) + 1 if versions else 0
-                    self._bucket_dir(b).mkdir(exist_ok=True)
-                    src.rename(self._bucket_dir(b) / f"v_{next_n:08d}")
-                    self._prune(b)
-                self._record_commit()
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-
-    def _prune(self, b: int) -> None:
-        """Retention: keep the last ``keep_versions`` FULL snapshots
-        plus every delta newer than the oldest kept snapshot (those
-        deltas are still reachable by time travel to commits between
-        the kept snapshots); everything older is vacuumed."""
-        fulls = [p for p in self._versions(b) if not p.name.endswith(".d")]
-        if len(fulls) <= self.keep_versions:
-            return
-        cutoff = fulls[-self.keep_versions].name
-        for old in self._versions(b):
-            if old.name < cutoff:
-                shutil.rmtree(old, ignore_errors=True)
+            base = self._latest()
+            state = self._read_chains(spark, self._chains(base[1], touched))
+            self._commit(merge_fn(state, batch.drop(BUCKET_COL)), check, base)
 
     def append_batch(self, batch: DataFrame) -> list[Path]:
         """LSM-style APPEND: write only the batch's rows, as one DELTA
@@ -514,52 +561,18 @@ class BucketedStateTable:
         one full version (call it on a maintenance cadence, exactly
         like parquet small-file compaction — same tradeoff, same
         loop)."""
-        staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
-        created: list[Path] = []
         with self._writer() as check:
-            try:
-                self._write_staged(batch, staging)
-                check()  # fenced? abort BEFORE the first commit rename
-                for src in sorted(staging.glob(f"{BUCKET_COL}=*")):
-                    b = int(src.name.split("=")[1])
-                    versions = self._versions(b)
-                    next_n = self._vnum(versions[-1]) + 1 if versions else 0
-                    self._bucket_dir(b).mkdir(exist_ok=True)
-                    dst = self._bucket_dir(b) / f"v_{next_n:08d}.d"
-                    src.rename(dst)
-                    created.append(dst)
-                self._record_commit()
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
-        return created
+            return self._commit(batch, check, self._latest(), delta=True)
 
     def snapshot(self, spark: SparkSession) -> int:
-        """Compact every bucket whose chain holds deltas into one full
-        snapshot version (the LSM compaction). Returns the number of
-        buckets compacted. Content is unchanged (asserted in tests);
+        """Compact every bucket whose recorded tip is a delta into one
+        full snapshot version (the LSM compaction). Returns the number
+        of buckets compacted. Content is unchanged (asserted in tests);
         read fan-in per bucket drops back to one directory."""
-        todo = [
-            b
-            for b in range(self.num_buckets)
-            if len(self._chain_dirs(b)) > 1
-            or any(p.name.endswith(".d") for p in self._chain_dirs(b))
-        ]
-        if not todo:
-            return 0
         with self._writer() as check:
-            state = self._read_chains(spark, self._latest_paths(todo))
-            staging = Path(tempfile.mkdtemp(prefix="state_staging_", dir=self.path))
-            try:
-                self._write_staged(state, staging)
-                check()  # fenced? abort BEFORE the first commit rename
-                for b in todo:
-                    src = staging / f"{BUCKET_COL}={b}"
-                    if not src.is_dir():
-                        continue
-                    next_n = self._vnum(self._versions(b)[-1]) + 1
-                    src.rename(self._bucket_dir(b) / f"v_{next_n:08d}")
-                    self._prune(b)
-                self._record_commit()
-            finally:
-                shutil.rmtree(staging, ignore_errors=True)
+            base = self._latest()
+            todo = [b for b, tip in base[1].items() if tip.endswith(".d")]
+            if todo:
+                state = self._read_chains(spark, self._chains(base[1], todo))
+                self._commit(state, check, base)
         return len(todo)

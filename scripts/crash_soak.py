@@ -144,10 +144,10 @@ def main() -> None:
 
     record_commit = target.state._record_commit
 
-    def record_commit_crash():
+    def record_commit_crash(*args):
         if armed.pop("cdc_commit", False):
             raise InjectedCrash("crash window: versions renamed, commit not recorded")
-        return record_commit()
+        return record_commit(*args)
 
     target.state._record_commit = record_commit_crash
 

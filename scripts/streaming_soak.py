@@ -158,7 +158,7 @@ def dedup_soak(spark, lines: list[str]) -> bool:
     # cycle prunes past them — the same keep_versions vacuum tradeoff
     # as full snapshots, documented in BucketedStateTable._prune)
     fan_in = max(
-        len(idx.state._chain_dirs(b)) for b in range(idx.state.num_buckets)
+        len(idx.state.chain_dirs_for([b])) for b in range(idx.state.num_buckets)
     )
     lines.append(
         f"compact(): {res} rows {pre_rows} -> {post} "
